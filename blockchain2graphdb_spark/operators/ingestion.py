@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..chain import fixtures
 from ..paths import tmp_root as _tmp_root
+from ..plans.localrel import local_rows_df
 from ..registry import query
 from ..sources.blockfile import read_blocks, normalize
 
@@ -203,7 +204,7 @@ def taint_flow_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed_addr = next(o[4] for o in c.outputs if o[0] == genesis_cb)
     root = _build_blk_files_once()
     tables = normalize(read_blocks(spark, f"{root}/blk*.dat"))
-    seeds = spark.createDataFrame([(seed_addr,)], "address string")
+    seeds = local_rows_df(spark, [(seed_addr,)], "address string")
     out = taint_flow(tables, seeds, n_iter=8, check_convergence=False)
     return (
         out.where(F.col("taint") > 0)

@@ -38,9 +38,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     skey = (spark.sparkContext.applicationId, session_token(spark))
     state = tuple(df._b2g_plan_serial for df in dfs.values())
     # belt-and-braces sentinel (ADVICE r16): an external dropTempView
-    # would leave _VIEWS_STATE claiming the views exist forever; one
-    # catalog existence probe per skip is ~1 ms vs 10 re-registrations
-    if _VIEWS_STATE.get(skey) == state and spark.catalog.tableExists(TABLES[0]):
+    # of ANY view would leave _VIEWS_STATE claiming the views exist
+    # forever; one catalog existence probe per view is ~1 ms each
+    if _VIEWS_STATE.get(skey) == state and all(
+        spark.catalog.tableExists(t) for t in TABLES
+    ):
         return
     for t, df in dfs.items():
         df.createOrReplaceTempView(t)

@@ -9,38 +9,69 @@ result tables (diffusion round counts, the driver union-find labels,
 Markov removal effects), so that tax was paid once per bench/gate
 invocation per key.
 
-`local_rows_df` routes the same rows through the Arrow/pandas
-conversion instead, which plans as a pure-JVM `LocalTableScan` —
-zero tasks, zero Python workers at action time (measured ~0.09 s for
-the same 4-row result; guide §6 "Arrow for driver transfers").
-Schemas and values are identical: the pandas frame is built with
-dtype=object so ints/strings/None reach Arrow unwidened, and the
-explicit `schema` argument pins the result types exactly as before.
-Any failure (pandas missing, exotic schema) falls back to the classic
-path, which is correct, just slower.
+`local_rows_df` is the engine's one constructor for driver-made
+frames. It routes the rows through the Arrow/pandas conversion
+instead, which plans as a pure-JVM `LocalTableScan` — zero tasks, zero
+Python workers at action time (measured ~0.09 s for the same 4-row
+result; guide §6 "Arrow for driver transfers"). Schemas and values are
+identical: the pandas frame is built with dtype=object so
+ints/strings/None reach Arrow unwidened, and the explicit `schema`
+argument pins the result types exactly as before. DDL-string schemas
+are parsed with `StructType.fromDDL`, the parser `createDataFrame`
+itself uses.
+
+Empty rows get an empty Arrow table instead: PySpark sends an EMPTY
+pandas frame down the pickled-RDD path, whose `LogicalRDD` has unknown
+size. An empty `LocalRelation` is one Catalyst can see is empty, so it
+prunes the joins and unions over it (e.g. `resume` folding a first
+micro-batch into empty state plans as the incoming rows alone) and its
+zero size estimate keeps downstream joins broadcastable.
+
+An expected conversion failure (pandas/pyarrow missing, a value Arrow
+rejects) falls back to the classic path, which is correct, just slower
+— and warns once, because the slow path is exactly the cost this
+module exists to remove.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+try:
+    from pyarrow import ArrowException
+except ImportError:  # pragma: no cover — the fallback below covers it
+    ArrowException = ImportError
+
+_FALLBACK_ERRORS = (ImportError, ValueError, TypeError, ArrowException)
+_WARNED_FALLBACK = False
 
 
 def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     rows = list(rows)
     try:
+        st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+        if not rows:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            empty = pa.Table.from_pylist([], schema=to_arrow_schema(st))
+            return spark.createDataFrame(empty, schema=st)
         import pandas as pd
 
-        if isinstance(schema, str):
-            # flat "name type, name type" schema strings only — nested
-            # types with commas would mis-split and hit the fallback
-            names = [c.strip().split()[0] for c in schema.split(",")]
-        else:
-            names = [f.name for f in schema.fields]
-        pdf = pd.DataFrame(rows, columns=names, dtype=object)
-        out = spark.createDataFrame(pdf, schema=schema)
-        # cheap sanity: the conversion must not drop/append rows
-        if len(pdf) != len(rows):  # pragma: no cover — defensive
-            raise ValueError("row count drift in pandas conversion")
-        return out
-    except Exception:
+        pdf = pd.DataFrame(rows, columns=st.names, dtype=object)
+        return spark.createDataFrame(pdf, schema=st)
+    except _FALLBACK_ERRORS as e:
+        global _WARNED_FALLBACK
+        if not _WARNED_FALLBACK:
+            _WARNED_FALLBACK = True
+            import warnings
+
+            warnings.warn(
+                f"local_rows_df: Arrow local relation failed ({e!r}); "
+                "falling back to a pickled-RDD frame, whose every action "
+                "starts Python workers.",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return spark.createDataFrame(rows, schema)

@@ -349,7 +349,9 @@ class SnapshotStore:
                 raise ValueError(f"{self.root}: empty table at version {version}")
             from pyspark.sql.types import StructType
 
-            return spark.createDataFrame([], StructType.fromJson(json.loads(sj)))
+            from ..plans.localrel import local_rows_df
+
+            return local_rows_df(spark, [], StructType.fromJson(json.loads(sj)))
         # mergeSchema: appends may evolve the schema (new nullable
         # columns); older files surface them as nulls
         reader = spark.read.option("mergeSchema", "true")

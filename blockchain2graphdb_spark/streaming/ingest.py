@@ -20,15 +20,21 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..chain import schema
 from ..chain.maintain import Tables, resume
+from ..plans.localrel import local_rows_df
 from ..sources.blockfile import DECODED_SCHEMA, normalize
 
 
 def empty_tables(spark: SparkSession) -> Tables:
+    """The state a stream starts from: four empty local relations
+    (plans/localrel.py), not pickled-RDD frames. Catalyst sees they are
+    empty, so the first micro-batch's `resume` plans without its
+    fork-probe join, anti-joins and unions, and the checkpointed state it
+    leaves carries the incoming scan's size instead of an unknown one."""
     return {
-        "blocks": spark.createDataFrame([], schema.BLOCKS),
-        "transactions": spark.createDataFrame([], schema.TRANSACTIONS),
-        "outputs": spark.createDataFrame([], schema.OUTPUTS),
-        "inputs": spark.createDataFrame([], schema.INPUTS),
+        "blocks": local_rows_df(spark, [], schema.BLOCKS),
+        "transactions": local_rows_df(spark, [], schema.TRANSACTIONS),
+        "outputs": local_rows_df(spark, [], schema.OUTPUTS),
+        "inputs": local_rows_df(spark, [], schema.INPUTS),
     }
 
 

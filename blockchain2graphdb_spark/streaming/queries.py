@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import events_raw_schema, normalize_events_ts, prep, table
+from ..plans.localrel import local_rows_df
 from ..registry import query
 
 
@@ -916,7 +917,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = (
             sess.read.parquet(f"{out}/v{versions[-1]}")
             if versions
-            else sess.createDataFrame([], "k long, seq int, op string, cents long")
+            else local_rows_df(sess, [], "k long, seq int, op string, cents long")
         )
         merged = (
             prev.unionByName(batch_df)

@@ -33,12 +33,24 @@ def test_local_rows_df_plans_as_local_scan(spark):
     """The whole point: no pickled RDD, no Python workers at action
     time — the plan must be a LocalTableScan (or empty relation), never
     a Scan ExistingRDD over a parallelized python list."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from blockchain2graphdb_spark.plans.localrel import local_rows_df
 
     df = local_rows_df(spark, [(1, 2), (3, 4)], "a long, b long")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
+    # empty rows too, for both schema forms: an empty LocalRelation,
+    # not the pickled-RDD frame PySpark builds from an empty pandas frame
+    st = StructType([StructField("a", LongType(), False), StructField("b", LongType())])
+    for sch in ("a long, b long", st):
+        empty = local_rows_df(spark, [], sch)
+        qe = empty._jdf.queryExecution()
+        assert "LocalRelation" in qe.optimizedPlan().toString()
+        assert "ExistingRDD" not in qe.executedPlan().toString()
+        assert empty.collect() == []
+    assert local_rows_df(spark, [], st).schema == st
 
 
 def test_local_rows_df_structtype_schema(spark):
@@ -166,6 +178,18 @@ def test_register_views_heals_dropped_view(spark):
     spark.catalog.dropTempView(TABLES[0])
     register_views(spark, SF_DIR)  # must repair, not skip
     assert spark.catalog.tableExists(TABLES[0])
+
+
+def test_register_views_heals_dropped_non_first_view(spark):
+    """The skip probe must cover every view, not just TABLES[0]."""
+    from blockchain2graphdb_spark.catalog import TABLES
+    from blockchain2graphdb_spark.operators.sqlsuite import register_views
+
+    register_views(spark, SF_DIR)
+    spark.catalog.dropTempView(TABLES[-1])
+    assert not spark.catalog.tableExists(TABLES[-1])
+    register_views(spark, SF_DIR)  # must repair, not skip
+    assert all(spark.catalog.tableExists(t) for t in TABLES)
 
 
 # --------------------------------------------------- expansion floor gate
