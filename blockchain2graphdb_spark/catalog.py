@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .plans.memo import memoized
+
 TABLES = (
     "region",
     "nation",
@@ -138,26 +140,25 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         name,
         _fixture_identity(sf_dir, name),
     )
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    if name == "events":
-        df = _events(spark, sf_dir)  # chaos seam inside normalize_events_ts
-    else:
-        df = _chaos_wrap(
-            _dates_to_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet")),
-            name,
-        )
-    while len(_TABLE_MEMO) >= 64:  # plans are tiny; bound handle count
-        _TABLE_MEMO.pop(next(iter(_TABLE_MEMO)))
-    # monotone serial: a never-reused identity for "this exact plan"
-    # (object ids recycle after GC; consumers like register_views key
-    # skip-decisions on this instead)
-    global _PLAN_SERIAL
-    _PLAN_SERIAL += 1
-    df._b2g_plan_serial = _PLAN_SERIAL
-    _TABLE_MEMO[key] = df
-    return df
+
+    def build() -> DataFrame:
+        if name == "events":
+            df = _events(spark, sf_dir)  # chaos seam inside normalize_events_ts
+        else:
+            df = _chaos_wrap(
+                _dates_to_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet")),
+                name,
+            )
+        # monotone serial: a never-reused identity for "this exact plan"
+        # (object ids recycle after GC; consumers like register_views key
+        # skip-decisions on this instead)
+        global _PLAN_SERIAL
+        _PLAN_SERIAL += 1
+        df._b2g_plan_serial = _PLAN_SERIAL
+        return df
+
+    # plans are tiny; the bound only caps the handle count
+    return memoized(_TABLE_MEMO, key, build, bound=64)
 
 
 _PLAN_SERIAL = 0

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iterate import local_checkpoint, observed_checkpoint
-from ..plans.sizing import adaptive_broadcast_rows, est_row_bytes
+from ..plans.sizing import broadcast_hint
 
 
 def connected_components(
@@ -41,9 +41,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    broadcast_nodes: int | None = None,
     canonical: bool = False,
-    probe_every: int = 2,
     driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Undirected connected components; returns (node, component) where
@@ -52,12 +50,10 @@ def connected_components(
     Checkpointed plans surface as LogicalRDDs with no size statistics,
     so Catalyst (and AQE) never broadcast the per-node label table and
     every round shuffles the full edge list. The node count is known
-    after the first materialization — when it fits comfortably in the
-    driver/executors (<= broadcast_nodes), hint `broadcast` on the
-    label side explicitly: each round then streams the checkpointed
-    edges map-side with zero edge shuffle. Past the threshold the hint
-    is dropped and rounds run as keyed shuffles with AQE skew handling
-    — the 100 TB path.
+    after the first materialization, and the label side goes through
+    the broadcast gate (plans/sizing.py): under it each round streams
+    the checkpointed edges map-side with zero edge shuffle, past it
+    rounds run as keyed shuffles — the 100 TB path.
 
     canonical=True declares every input edge oriented src < dst
     (true for star-contraction and a<b candidate-pair builders), so
@@ -132,13 +128,7 @@ def connected_components(
         .select("node", F.least(F.col("node"), F.col("mb")).alias("comp")),
         F.count(F.lit(1)),
     )
-    if broadcast_nodes is None:
-        # adaptive (SURVEY §8 limit closed; plans/sizing.py): gate from
-        # the ACTUAL label-row schema, not a constant row size
-        broadcast_nodes = adaptive_broadcast_rows(
-            edges.sparkSession, bytes_per_row=est_row_bytes(comp.schema)
-        )
-    hint = F.broadcast if n_nodes <= broadcast_nodes else (lambda df: df)
+    hint = broadcast_hint(edges.sparkSession, n_nodes, comp.schema)
 
     # Shiloach–Vishkin-style union-find in rounds; each outer round:
     #   (1) hash-min — every node takes the min label over itself and
@@ -220,9 +210,7 @@ def list_rank(
     links: DataFrame,
     id_col: str = "id",
     parent_col: str = "parent",
-    broadcast_nodes: int | None = None,
     max_iter: int = 64,
-    probe_every: int = 2,
 ) -> DataFrame:
     """Position of each node in its chain (1-based), from (id, parent)
     links alone, parent NULL at the head. Pointer jumping with THREE
@@ -231,15 +219,13 @@ def list_rank(
     a chain of length L resolves in ceil(log4 L) checkpoint barriers.
 
     Same checkpoint-loses-stats story as connected_components: the
-    lookup side of each self-join is hinted broadcast while the node
-    count (known after the first materialization) stays under
-    broadcast_nodes; above it, shuffled self-joins.
+    lookup side of each self-join goes through the broadcast gate with
+    the node count known after the first materialization.
 
     The liveness probe rides the per-round checkpoint job as an
     `observe()` metric (zero extra jobs), so the loop exits exactly at
-    resolution; `probe_every` is retained for API compatibility but no
-    longer matters. max_iter (chains up to 2^64) is a divergence
-    backstop only.
+    resolution. max_iter (chains up to 2^64) is a divergence backstop
+    only.
     """
     # eager checkpoint with the hint-sizing count riding the job
     cur, n_nodes = observed_checkpoint(
@@ -252,13 +238,7 @@ def list_rank(
         ),
         F.count(F.lit(1)),
     )
-    if broadcast_nodes is None:
-        # adaptive (SURVEY §8 limit closed; plans/sizing.py): gate from
-        # the ACTUAL pointer-row schema, not a constant row size
-        broadcast_nodes = adaptive_broadcast_rows(
-            links.sparkSession, bytes_per_row=est_row_bytes(cur.schema)
-        )
-    hint = F.broadcast if n_nodes <= broadcast_nodes else (lambda df: df)
+    hint = broadcast_hint(links.sparkSession, n_nodes, cur.schema)
 
     def jump(base: DataFrame, lk: DataFrame) -> DataFrame:
         # one pointer-jump composition against lk: ptr := lk[ptr].ptr,
@@ -301,8 +281,7 @@ def list_rank(
         # estimates every round (see connected_components / STATUS.md)
         # the liveness probe rides the checkpoint job (observe): an
         # unresolved-pointer count per round costs zero extra jobs, so
-        # the loop exits exactly at resolution instead of up to
-        # probe_every - 1 no-op rounds later
+        # the loop exits exactly at resolution
         cur, unresolved = observed_checkpoint(
             stepped,
             F.count(F.when(F.col("ptr").isNotNull(), 1)),

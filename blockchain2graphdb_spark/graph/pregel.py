@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iterate import local_checkpoint, observed_checkpoint
-from ..plans.sizing import adaptive_broadcast_rows, est_row_bytes
+from ..plans.sizing import broadcast_hint
 
 
 def pregel(
@@ -37,26 +37,23 @@ def pregel(
     vprog: Callable[[Column, Column], Column],
     # vprog(attr, aggregated_msg) -> new attr
     max_iter: int = 50,
-    broadcast_nodes: int | None = None,
     needs_dst_attr: bool = True,
     check_convergence: bool = True,
-    probe_every: int = 2,
 ) -> DataFrame:
     """Returns (id, attr) at fixpoint (or after max_iter supersteps).
 
     Same stats-loss story as graph/components.py: the per-superstep
     vertex table comes out of a localCheckpoint with no size statistics,
     so the triplet build would shuffle the full edge list every round.
-    While the vertex count (known after the first materialization) fits
-    under broadcast_nodes, the vertex side is hinted broadcast and each
-    superstep streams the edges map-side; larger graphs fall back to
-    keyed shuffles with AQE skew handling.
+    The vertex side goes through the broadcast gate (plans/sizing.py)
+    with the vertex count known after the first materialization: under
+    it each superstep streams the edges map-side, past it supersteps
+    run as keyed shuffles.
 
     The convergence probe rides the per-superstep checkpoint job as an
     `observe()` metric (plans.iterate.observed_checkpoint), so checking
     every superstep costs zero extra jobs and the loop exits exactly at
-    the fixpoint. `probe_every` is retained for API compatibility but
-    no longer matters.
+    the fixpoint.
     """
     v = vertices.select("id", "attr")
     if initial_msg is not None:
@@ -64,14 +61,7 @@ def pregel(
     # eager checkpoint (accumulator-lifecycle rule) with the hint-sizing
     # count riding the materialization job as an observe() metric
     v, n_vertices = observed_checkpoint(v, F.count(F.lit(1)))
-    if broadcast_nodes is None:
-        # adaptive (SURVEY §8 limit closed): derived from the session's
-        # executor/driver heap AND the actual vertex schema, resolved
-        # once per loop (plans/sizing.py)
-        broadcast_nodes = adaptive_broadcast_rows(
-            vertices.sparkSession, bytes_per_row=est_row_bytes(v.schema)
-        )
-    hint = F.broadcast if n_vertices <= broadcast_nodes else (lambda df: df)
+    hint = broadcast_hint(vertices.sparkSession, n_vertices, v.schema)
 
     for i in range(max_iter):
         src = v.select(F.col("id").alias("src"), F.col("attr").alias("src_attr"))

@@ -34,7 +34,7 @@ same way PageRank/k-core did — the analytics a graph DB user actually
 runs on wallet/co-purchase graphs.
 
 100 TB shape: the frontier is (k_seeds × nodes)-sized and broadcast
-only while k·|nodes| fits the adaptive gate (plans/sizing.py);
+only while k·|nodes| fits the broadcast gate (plans/sizing.py);
 past it the per-level joins degrade to keyed shuffles on (root, node).
 The edge list is built once (`_copurchase_pairs`, checkpointed) and
 re-read per level map-side. Nothing is ever per-seed or pairwise.
@@ -47,7 +47,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import parquet_num_rows, prep, table
 from ..plans.iterate import local_checkpoint
-from ..plans.sizing import adaptive_broadcast_rows, est_row_bytes
+from ..plans.memo import memoized, pairs_memo_key, unpersist
+from ..plans.sizing import broadcast_hint
 from ..registry import query
 from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
 
@@ -63,7 +64,7 @@ _CLO_SEEDS = 8
 # sets by exact root filtering (the k smallest-md5 seeds are a prefix
 # of the 2k smallest, and per-root BFS results are independent, so the
 # filter is bit-exact). Evicted entries unpersist their checkpoint
-# blocks so stale fixtures don't pin executor storage.
+# blocks so stale fixtures don't pin executor storage (plans/memo.py).
 _SEED_BFS_MEMO: dict = {}
 
 
@@ -76,23 +77,13 @@ def _seed_bfs(
     if n_seeds > _BTW_SEEDS:
         bfs, seeds, _cks = _seed_bfs_build(spark, sf_dir, n_seeds, depth)
         return bfs, seeds
-    from .graphops import _pairs_memo_key
-
-    key = _pairs_memo_key(spark, sf_dir) + (depth,)
-    hit = _SEED_BFS_MEMO.get(key)
-    if hit is None:
-        while len(_SEED_BFS_MEMO) >= 8:  # bound driver-side handles
-            _old_bfs, _old_seeds, old_cks = _SEED_BFS_MEMO.pop(
-                next(iter(_SEED_BFS_MEMO))
-            )
-            for ck in old_cks:
-                try:
-                    ck.rdd.unpersist(False)
-                except Exception:
-                    pass
-        hit = _seed_bfs_build(spark, sf_dir, _BTW_SEEDS, depth)
-        _SEED_BFS_MEMO[key] = hit
-    bfs, seeds, _cks = hit
+    bfs, seeds, _cks = memoized(
+        _SEED_BFS_MEMO,
+        pairs_memo_key(spark, sf_dir) + (depth,),
+        lambda: _seed_bfs_build(spark, sf_dir, _BTW_SEEDS, depth),
+        bound=8,
+        release=lambda old: unpersist(*old[2]),
+    )
     if n_seeds == _BTW_SEEDS:
         return bfs, seeds
     sub_seeds = seeds.where(F.col("i") < n_seeds)
@@ -139,14 +130,10 @@ def _seed_bfs_build(
         F.col("n").alias("node"),
         F.lit(1).cast("long").alias("sigma"),
     )
-    # frontier rows ≤ n_seeds · |parts| (nodes are part keys); broadcast
-    # under the memory-adaptive gate (sized from the actual frontier
-    # schema), keyed shuffles above it
-    n_parts = parquet_num_rows(sf_dir, "part")
-    gate = adaptive_broadcast_rows(
-        spark, bytes_per_row=est_row_bytes(frontier.schema)
+    # frontier rows ≤ n_seeds · |parts| (nodes are part keys)
+    hint = broadcast_hint(
+        spark, n_seeds * parquet_num_rows(sf_dir, "part"), frontier.schema
     )
-    hint = F.broadcast if n_seeds * n_parts <= gate else (lambda df: df)
     levels = [frontier.withColumn("dist", F.lit(0))]
     seen = frontier.select("root", "node")
     for h in range(1, depth + 1):
@@ -401,23 +388,18 @@ def edge_betweenness_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sb.n").alias("t"),
         )
     )
-    # sd/td are node-sized x #pids tables; broadcast only under the
-    # adaptive row gate (ADVICE r16 — the r16 form hinted both
+    # sd/td are node-sized x #pids tables of the same shape; both go
+    # through the broadcast gate (ADVICE r16 — the r16 form hinted both
     # unconditionally, which on a huge graph could blow the broadcast
-    # ceiling; above the gate the joins degrade to keyed shuffles, the
-    # same fallback every frontier operator takes)
-    gate = adaptive_broadcast_rows(spark, bytes_per_row=32)
-    side = (
-        F.broadcast
-        if half * parquet_num_rows(sf_dir, "part") <= gate
-        else (lambda df: df)
-    )
-    sd = side(F.broadcast(p).join(bfs, bfs["root"] == F.col("s")).select(
+    # ceiling)
+    sd = F.broadcast(p).join(bfs, bfs["root"] == F.col("s")).select(
         "pid",
         F.col("node").alias("u"),
         F.col("dist").alias("dsu"),
         F.col("sigma").alias("ssu"),
-    ))
+    )
+    side = broadcast_hint(spark, half * parquet_num_rows(sf_dir, "part"), sd.schema)
+    sd = side(sd)
     # r16: td is node-sized x #pids — the SAME size class as sd, which
     # was already broadcast; leaving it unhinted made the second join a
     # sort-merge that shuffled the sd-expanded edge stream (profiled:
@@ -544,7 +526,7 @@ def graph_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row value-hashes bit-for-bit.
 
     Scale shape (100 TB): each level is one keyed join frontier->sym
-    plus an anti-join (frontier broadcast under the adaptive gate,
+    plus an anti-join (frontier broadcast under the broadcast gate,
     keyed shuffles past it); the second sweep's seed is a 1-row
     TakeOrdered result — no driver-side argmax, no per-node loop. The
     edge list is built once and checkpointed (`_copurchase_pairs`).
@@ -560,9 +542,8 @@ def graph_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     nodes = _pair_nodes(pairs)
-    n_parts = parquet_num_rows(sf_dir, "part")
-    gate = adaptive_broadcast_rows(spark, bytes_per_row=16)
-    hint = F.broadcast if n_parts <= gate else (lambda df: df)
+    # frontiers are one node column, the shape of nodes
+    hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), nodes.schema)
 
     def sweep(seed_df: DataFrame) -> DataFrame:
         frontier = local_checkpoint(seed_df.select(F.col("n").alias("node")))
@@ -840,7 +821,7 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to `eigenvector_centrality` — each round is
     ONE keyed join edges→x plus a hash aggregate (the Pregel superstep
     shape), per-round localCheckpoint cuts the lineage, att is a 1-row
-    broadcast, x is node-sized and broadcast under the adaptive gate.
+    broadcast, x is node-sized and broadcast under the broadcast gate.
     Edge list memoized per session (`_copurchase_pairs`)."""
     prep(spark)
     pairs, _ = _copurchase_pairs(spark, sf_dir)
@@ -860,9 +841,7 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(1000000).cast("decimal(38,0)").alias("v"))
     )
     v = local_checkpoint(v)
-    n_parts = parquet_num_rows(sf_dir, "part")
-    gate = adaptive_broadcast_rows(spark, bytes_per_row=24)
-    hint = F.broadcast if n_parts <= gate else (lambda df: df)
+    hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), v.schema)
     for _ in range(_KATZ_ROUNDS):
         w = local_checkpoint(
             sym.join(
@@ -925,7 +904,7 @@ def khop_induced_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the BFS is memoized; membership classification is two
     LEFT probes of the canonical edge list against the node set
-    (broadcast under the adaptive gate inside `_seed_bfs`'s machinery;
+    (broadcast under the broadcast gate inside `_seed_bfs`'s machinery;
     here Catalyst-decided) plus one 1-row aggregate. Nothing pairwise,
     no windows over data-sized input."""
     prep(spark)

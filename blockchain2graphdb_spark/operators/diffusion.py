@@ -114,7 +114,7 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     from ..catalog import parquet_num_rows
     from ..plans.confs import scoped_confs
-    from ..plans.sizing import adaptive_broadcast_rows
+    from ..plans.sizing import broadcast_hint
 
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
     # r13 perf pass (the eigenvector_centrality lesson, ARCHITECTURE
@@ -123,13 +123,9 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-stage replan latency buys nothing on static bounded rounds)
     # and size the shuffle to the edge list (measured 3.4s -> 2.4s at
     # sf0.1, counts identical). Frontier/seen broadcasts stay behind
-    # the adaptive gate: they are node-sized, so at 100 TB the joins
-    # degrade to keyed shuffles exactly as before.
+    # the broadcast gate: they are node-sized.
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     nparts = max(4, min(default_parts, (2 * (n_edges or 0)) // 75_000 or 4))
-    n_parts_tbl = parquet_num_rows(sf_dir, "part")
-    gate = adaptive_broadcast_rows(spark, bytes_per_row=16)
-    hint = F.broadcast if n_parts_tbl <= gate else (lambda df: df)
     with scoped_confs(
         spark,
         {
@@ -165,6 +161,7 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(_IC_SEEDS)
             .select(F.col("n").alias("node"))
         )
+        hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), frontier.schema)
         seen = frontier
         counts = [(0, frontier.count())]
         for h in range(1, _IC_ROUNDS + 1):

@@ -12,13 +12,14 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import parquet_num_rows, prep, table
-from ..plans.iterate import local_checkpoint
 from ..graph.components import (
     connected_components,
     incremental_components,
     list_rank,
 )
-from ..plans.iterate import observed_checkpoint
+from ..plans.iterate import local_checkpoint, observed_checkpoint
+from ..plans.memo import memoized, pairs_memo_key, unpersist
+from ..plans.sizing import broadcast_hint
 from ..registry import query
 
 
@@ -361,27 +362,10 @@ def wallet_ids_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# session-scoped memo for the checkpointed co-purchase edge list: the
-# driver gate and bench run MANY graph keys in one SparkSession, and
-# each used to rebuild the same ~1.5-2s edge list. Keyed by the Spark
-# application + the fixture's identity (abs path + size + mtime), so a
-# regenerated fixture or a new session can never serve stale edges;
-# localCheckpoint RDDs live for the session, so the cached DataFrame
-# stays valid exactly as long as the key does.
+# session-scoped memo for the checkpointed co-purchase edge list
+# (plans/memo.py): a correctness sweep or a bench runs MANY graph keys
+# in one SparkSession, and each used to rebuild the same ~1.5-2s edge list
 _PAIRS_MEMO: dict = {}
-
-
-def _pairs_memo_key(spark: SparkSession, sf_dir: str) -> tuple:
-    import os
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    st = os.stat(src)
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_size,
-        st.st_mtime_ns,
-    )
 
 
 def _expand_scope(spark: SparkSession, sf_dir: str | None = None):
@@ -407,6 +391,8 @@ def _expand_scope(spark: SparkSession, sf_dir: str | None = None):
     (OPTIMIZATION_r17.md): 64k / derived / off are within the noise
     band at sf0.1; the derived form is kept for the scale-adaptive
     shape, not a local win."""
+    import pyarrow as pa
+
     from ..plans.confs import scoped_confs
 
     floor = 64 * 1024
@@ -415,7 +401,8 @@ def _expand_scope(spark: SparkSession, sf_dir: str | None = None):
             est_bytes = parquet_num_rows(sf_dir, "lineitem") * 16
             par = max(1, spark.sparkContext.defaultParallelism)
             floor = max(64 * 1024, min(1024 * 1024, est_bytes // par))
-        except OSError:
+        except (OSError, pa.ArrowInvalid):
+            # a missing file or an unreadable footer keeps the floor
             pass
     return scoped_confs(
         spark,
@@ -462,10 +449,9 @@ def _copurchase_pairs(
     edges). Orders bound the per-group fanout (max ~7 parts/order in
     TPC-H-shaped data), so no single task inflates.
 
-    Returns (pairs, edge_count); edge_count is None when
-    checkpoint=False. The checkpoint is lazy and the count action
-    materializes it, so callers get the broadcast-gate count and the
-    materialization in ONE driver-visible job."""
+    Returns (pairs, edge_count), memoized per session and fixture;
+    edge_count is None when checkpoint=False. Callers feed the edge
+    count to their broadcast gates."""
     per_order = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -485,29 +471,26 @@ def _copurchase_pairs(
         .select("p.a", "p.b")
         .distinct()
     )
-    if checkpoint:
-        key = _pairs_memo_key(spark, sf_dir)
-        hit = _PAIRS_MEMO.get(key)
-        if hit is not None:
-            return hit
+    if not checkpoint:
+        return pairs, None
+
+    def build():
         # reused by adjacency + both probes in the callers; the eager
         # materialization runs under _expand_scope so the quadratic
         # explode is not packed onto a handful of tasks (see its doc)
         with _expand_scope(spark, sf_dir):
-            pairs = pairs.localCheckpoint(eager=True)
-        while len(_PAIRS_MEMO) >= 8:  # bound driver-side handles
-            # Evict oldest-first (dict insertion order) and release its
-            # checkpoint blocks so stale fixtures don't pin executor
-            # storage for the whole session. Best-effort: the RDD may
-            # already be gone if the context restarted.
-            old_df, _cnt = _PAIRS_MEMO.pop(next(iter(_PAIRS_MEMO)))
-            try:
-                old_df.rdd.unpersist(False)
-            except Exception:
-                pass
-        _PAIRS_MEMO[key] = (pairs, pairs.count())
-        return _PAIRS_MEMO[key]
-    return pairs, None
+            ck = pairs.localCheckpoint(eager=True)
+        return ck, ck.count()
+
+    # evicted entries release their checkpoint blocks so stale fixtures
+    # don't pin executor storage for the whole session
+    return memoized(
+        _PAIRS_MEMO,
+        pairs_memo_key(spark, sf_dir),
+        build,
+        bound=8,
+        release=lambda old: unpersist(old[0]),
+    )
 
 
 @query(
@@ -524,9 +507,7 @@ def _copurchase_pairs(
     JOIN pairs e3 ON e3.a = e1.a AND e3.b = e2.b
     """,
 )
-def triangle_count(
-    spark: SparkSession, sf_dir: str, broadcast_edges_max: int = 4_000_000
-) -> DataFrame:
+def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2-family: global triangle count on the part co-purchase graph.
 
     Edges are canonical a<b pairs, so each triangle a<b<c is counted
@@ -536,15 +517,13 @@ def triangle_count(
     happens inside one vectorized array_intersect per EDGE instead of
     materializing the Σ deg² wedge stream as rows (3–4× faster here
     than the ordered 3-way self-join it replaces, same count). The
-    adjacency table is broadcast only while it fits (count-conditional
-    hint, same pattern as graph/components.py — localCheckpoint output
-    has no stats, so AQE can never make this call itself); past the
-    threshold both probes fall back to keyed shuffles co-bucketed with
+    adjacency table goes through the broadcast gate (plans/sizing.py);
+    past it both probes fall back to keyed shuffles co-bucketed with
     the edge list (adjacency checkpointed there so the two probes don't
     recompute it), and hub vertices are split by AQE skew handling.
 
     Skew evidence: tests/test_graph_skew.py forces this shuffle path
-    (broadcast_edges_max=0) on a mega-hub graph (one vertex in ~30% of
+    (a zero gate limit) on a mega-hub graph (one vertex in ~30% of
     groups) and pins the exact count. Per-ROW payload is bounded by the
     max forward-degree (w>v orientation halves hub rows); a corpus with
     hubs of forward-degree >~10^6 would want the wedge-stream form for
@@ -553,18 +532,15 @@ def triangle_count(
     prep(spark)
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
     adj = pairs.groupBy("a").agg(F.array_sort(F.collect_list("b")).alias("nb"))
-    # total adjacency payload ≈ one array cell per edge, so gate the
-    # broadcast on the edge count (folded into the checkpoint
-    # materialization job inside _copurchase_pairs — no separate count).
-    # Broadcast path: leave adj unmaterialized — each broadcast build is
-    # one cheap partial agg over the checkpointed pairs, cheaper than an
-    # extra localCheckpoint round-trip (measured). Shuffle path: the two
-    # probes would each recompute the aggregate, so checkpoint it once.
-    if n_edges <= broadcast_edges_max:
-        hint = F.broadcast
-    else:
+    # total adjacency payload ≈ one array cell per edge, so the gate
+    # reads the edge count. Broadcast path: leave adj unmaterialized —
+    # each broadcast build is one cheap partial agg over the
+    # checkpointed pairs, cheaper than an extra localCheckpoint
+    # round-trip (measured). Shuffle path: the two probes would each
+    # recompute the aggregate, so checkpoint it once.
+    hint = broadcast_hint(spark, n_edges, adj.schema)
+    if hint is not F.broadcast:
         adj = adj.localCheckpoint(eager=True)
-        hint = lambda df: df  # noqa: E731
         # Size the probe-join shuffles to the edge payload (one array
         # cell per edge on both the pairs and the joined-intermediate
         # side): 32 partitions hold ~190 MB each at 36M edges and the
@@ -613,9 +589,7 @@ def triangle_count(
     FROM deg d LEFT JOIN closed c ON c.u = d.u
     """,
 )
-def clustering_coefficient(
-    spark: SparkSession, sf_dir: str, broadcast_edges_max: int = 4_000_000
-) -> DataFrame:
+def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8 companion: local clustering coefficient for a seed set (the
     p_size=50 parts, same seeds as bfs_distance) on the part
     co-purchase graph — closed-wedge fraction per node, the standard
@@ -632,8 +606,8 @@ def clustering_coefficient(
     graphs the scale levers are the usual ones: cap/sample hub
     neighborhoods, or orient wedges through the lower-degree endpoint
     so fwd arrays are bounded by forward-degree. The forward-adjacency
-    side is broadcast only under the same count-conditional gate as
-    triangle_count; past it, keyed shuffles.
+    side goes through the broadcast gate with the edge count, as in
+    triangle_count.
     """
     prep(spark)
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
@@ -650,7 +624,7 @@ def clustering_coefficient(
         F.count(F.lit(1)).alias("degree"),
     )
     fwd = pairs.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("fwd"))
-    hint = F.broadcast if n_edges <= broadcast_edges_max else (lambda df: df)
+    hint = broadcast_hint(spark, n_edges, fwd.schema)
     closed = (
         nb_edges.join(nb_arr.select("u", "nbu"), "u")
         .join(
@@ -710,9 +684,8 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear Catalyst plan — level h expands ONLY the nodes first
     discovered at level h-1 (anti-join against the seen set), so every
     node lands in exactly one level and the result is a plain union,
-    no final aggregate. Each frontier is node-sized and broadcast under
-    the same 4M gate as pagerank_exact, so the lineitem projection is
-    streamed MAP-SIDE with no edge shuffle and, critically, no
+    no final aggregate. Each frontier is node-sized and goes through the
+    broadcast gate, so the lineitem projection is streamed MAP-SIDE with no edge shuffle and, critically, no
     per-superstep driver synchronization, eager checkpoint, or vertex-
     table maintenance join (3.42 → 1.75s at sf0.1 — the number STATUS
     records; identical recursive-CTE oracle). Past the broadcast gate
@@ -734,13 +707,6 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .localCheckpoint(eager=True)
     )
-    # both frontier kinds are node-sized (parts / orders); gate the
-    # broadcast on the bigger side's row count, read from the parquet
-    # FOOTER (genuinely metadata-only — a Spark count() would be a real
-    # scan job per invocation; directory-tolerant per ADVICE r6)
-    n_orders = parquet_num_rows(sf_dir, "orders")
-    hint = F.broadcast if n_orders <= 4_000_000 else (lambda df: df)
-
     # p_partkey is the part table's key — no dedup needed; checkpoint
     # because seeds is referenced ~5x (level-1 frontier, the seen set
     # at every level, the final union)
@@ -750,6 +716,9 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").alias("id"))
         .localCheckpoint(eager=True)
     )
+    # both frontier kinds are one key column (parts / orders); the gate
+    # reads the bigger side's row count from the orders parquet footer
+    hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "orders"), seeds.schema)
     # textbook frontier BFS: each level expands ONLY the nodes first
     # discovered at the previous level (anti-join against everything
     # seen), so each lineitem row is emitted O(1) times across the run;
@@ -879,17 +848,19 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-count gate, edges localCheckpointed once.
     """
     prep(spark)
-    pairs, n_edges = _copurchase_pairs(spark, sf_dir)
+    pairs, _ = _copurchase_pairs(spark, sf_dir)
     sym = pairs.union(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).select(F.col("a").alias("src"), F.col("b").alias("dst")).localCheckpoint(
         eager=True
     )
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint(eager=True)
-    n_nodes = deg.count()
-    hint = F.broadcast if n_nodes <= 4_000_000 else (lambda df: df)
+    deg, n_nodes = observed_checkpoint(
+        sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg")),
+        F.count(F.lit(1)),
+        reset_stats=False,
+    )
+    # contributions are (id, c) longs, the shape of deg
+    hint = broadcast_hint(spark, n_nodes, deg.schema)
 
     scores = deg.select("id", F.lit(_PR_SCALE).cast("long").alias("score"), "deg")
     for _ in range(_PR_ITERS):
@@ -985,19 +956,19 @@ def personalized_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("_s", F.lit(1))
     )
-    base = (
-        deg.join(seeds, "id", "left")
-        .select(
+    base, n_nodes = observed_checkpoint(
+        deg.join(seeds, "id", "left").select(
             "id",
             "deg",
             F.when(F.col("_s") == 1, F.lit(_PR_SCALE).cast("long"))
             .otherwise(F.lit(0).cast("long"))
             .alias("r"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        F.count(F.lit(1)),
+        reset_stats=False,
     )
-    n_nodes = base.count()
-    hint = F.broadcast if n_nodes <= 4_000_000 else (lambda df: df)
+    # contributions are (id, c) longs, the shape of deg
+    hint = broadcast_hint(spark, n_nodes, deg.schema)
 
     scores = base.select("id", F.col("r").alias("score"), "deg", "r")
     for _ in range(_PR_ITERS):
@@ -1195,9 +1166,7 @@ def personalized_pagerank_ranks(
     LEFT JOIN inter i ON i.a = p.a AND i.b = p.b
     """,
 )
-def neighbor_jaccard(
-    spark: SparkSession, sf_dir: str, broadcast_edges_max: int = 4_000_000
-) -> DataFrame:
+def neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8 companion: per-edge neighborhood Jaccard similarity on the
     part co-purchase graph — |N(a) ∩ N(b)| / |N(a) ∪ N(b)| for every
     canonical edge (a, b), the standard link-strength / link-prediction
@@ -1213,9 +1182,9 @@ def neighbor_jaccard(
     clustering_coefficient the rows carry neighbor ARRAYS, so shuffled
     bytes are ~Σ deg² for hub-heavy graphs — cap or minhash-sketch hub
     neighborhoods past ~10⁴ degree at 100 TB (sketched Jaccard is the
-    dedup_minhash estimator pointed at adjacency sets). Adjacency is
-    broadcast under the same count-conditional gate as triangle_count;
-    past it, keyed shuffles with AQE skew splitting.
+    dedup_minhash estimator pointed at adjacency sets). Adjacency goes
+    through the broadcast gate with the edge count, as in
+    triangle_count; past it, keyed shuffles with AQE skew splitting.
     """
     prep(spark)
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
@@ -1224,11 +1193,9 @@ def neighbor_jaccard(
         F.array_sort(F.collect_list("b")).alias("nb"),
         F.count(F.lit(1)).alias("d"),
     )
-    if n_edges > broadcast_edges_max:
+    hint = broadcast_hint(spark, n_edges, adj.schema)
+    if hint is not F.broadcast:
         adj = adj.localCheckpoint(eager=True)
-        hint = lambda df: df  # noqa: E731
-    else:
-        hint = F.broadcast
     adj_a = adj.select(F.col("a").alias("ja"), F.col("nb").alias("nba"), F.col("d").alias("da"))
     adj_b = adj.select(F.col("a").alias("jb"), F.col("nb").alias("nbb"), F.col("d").alias("db"))
     inter = F.size(F.array_intersect("nba", "nbb")).cast("long")
@@ -1324,7 +1291,7 @@ def kcore(
     count the peel needs anyway rides the checkpoint job as an
     observe() metric (plans.iterate.observed_checkpoint). Rounds = peel depth (typically small; max_iter bounds
     pathological chains). The surviving-node side of each semi-join is
-    count-gated for broadcast like every loop here; past the gate,
+    behind the broadcast gate (plans/sizing.py); past it,
     keyed shuffles with AQE. Exact parity with a pure-Python peel is
     pinned in tests/test_graph_cohesion.py.
     """
@@ -1336,9 +1303,8 @@ def kcore(
     sym = pairs.union(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
-    # |sym| = 2·|pairs| by construction — gate the hint without a job
-    # (the eager checkpoint above materialized sym already)
-    hint = F.broadcast if 2 * n_edges <= 8_000_000 else (lambda df: df)
+    # the peeled node sets are bounded by |sym| = 2·|pairs|
+    hint = broadcast_hint(spark, 2 * n_edges, sym.select("a").schema)
 
     edges = sym
     for _ in range(max_iter):
@@ -1613,10 +1579,8 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each round is ONE keyed shuffle (relax messages
     groupBy dst, min combiner) plus a node-keyed fold; the frontier
-    table is node-sized, broadcast into the edge join under the same
-    4M-node gate as pagerank_exact (counted directly on the distinct
-    node set, not inferred from edge rows). Edges are
-    localCheckpointed once — every round re-reads the same
+    table is node-sized and goes through the broadcast gate with the
+    part table's footer row count. Edges are localCheckpointed once — every round re-reads the same
     materialized partitions.
     """
     prep(spark)
@@ -1651,18 +1615,12 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode otherwise lands on ~4 AQE-coalesced tasks (see its doc)
     with _expand_scope(spark, sf_dir):
         sym = sym.localCheckpoint(eager=True)
-    # the broadcast side is the node-sized frontier table, so gate on
-    # the actual node count (sym is symmetric: src spans every node) —
-    # same 4M-node bound as pagerank_exact, one count on the
-    # checkpointed edge partitions
-    n_nodes = sym.select("src").distinct().count()
-    hint = F.broadcast if n_nodes <= 4_000_000 else (lambda df: df)
-
     dist = (
         table(spark, sf_dir, "part")
         .where(F.col("p_size") == 50)
         .select(F.col("p_partkey").alias("id"), F.lit(0).cast("long").alias("dist"))
     )
+    hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), dist.schema)
     for _ in range(_SSSP_ROUNDS):
         relax = (
             sym.join(hint(dist), sym["src"] == dist["id"])
@@ -1739,19 +1697,6 @@ def hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # the broadcast sides are the hub/authority score tables (one row
-    # per distinct supplier / part), so gate on those counts directly
-    # rather than the edge-row proxy — one agg job on the checkpointed
-    # edges; same 4M-node bound as pagerank_exact
-    sides = e.agg(
-        F.countDistinct("s").alias("ns"), F.countDistinct("p").alias("np")
-    ).head()
-    hint = (
-        F.broadcast
-        if max(sides["ns"], sides["np"]) <= 4_000_000
-        else (lambda df: df)
-    )
-
     def guarded(col, what):
         return F.when(col < _HITS_GUARD, col).otherwise(
             F.raise_error(
@@ -1765,6 +1710,9 @@ def hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     a1 = e.groupBy("p").agg(guarded(F.count(F.lit(1)), "a1").alias("a"))
+    # the score tables hold one row per supplier / part
+    n_side = max(parquet_num_rows(sf_dir, "supplier"), parquet_num_rows(sf_dir, "part"))
+    hint = broadcast_hint(spark, n_side, a1.schema)
     h1 = (
         e.join(hint(a1), "p")
         .groupBy("s")
@@ -2011,14 +1959,11 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     # so the (cnt DESC, lbl ASC) winner is just min(neighbor) — the
     # components.py first-round hash-min fold. One groupBy replaces the
     # join + two-level vote aggregate of a full round.
-    labels = local_checkpoint(
-        sym.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("lbl"))
+    labels, n_nodes = observed_checkpoint(
+        sym.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("lbl")),
+        F.count(F.lit(1)),
     )
-    # checkpointed label tables carry no size stats, so gate the
-    # broadcast explicitly (the connected_components discipline): while
-    # the node table fits, every round streams the checkpointed edges
-    # map-side with zero edge shuffle
-    hint = F.broadcast if labels.count() <= 4_000_000 else (lambda df: df)
+    hint = broadcast_hint(spark, n_nodes, labels.schema)
     for _ in range(_LPA_ROUNDS - 1):
         votes = (
             sym.join(hint(labels.select(F.col("node").alias("dst"), "lbl")), "dst")

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 _WARNED_FALLBACK = False
 
 
-def observed_checkpoint(df: DataFrame, metric):
+def observed_checkpoint(df: DataFrame, metric, reset_stats: bool = True):
     """Checkpoint with a convergence/size metric computed DURING
     materialization: `observe()` metrics are collected by the eager
     localCheckpoint's own job (measured: Observation.get returns in
@@ -48,9 +48,10 @@ def observed_checkpoint(df: DataFrame, metric):
     the fresh checkpoint blocks. Eager materialization is MANDATORY
     here twice over: it is what delivers the metric, and it is the
     accumulator-lifecycle rule (see local_checkpoint below / STATUS).
-    Returns (checkpointed df with stats reset, metric value)."""
+    Returns (checkpointed df, metric value); `reset_stats` as in
+    `local_checkpoint`."""
     obs = Observation()
-    ck = local_checkpoint(df.observe(obs, metric.alias("m")))
+    ck = local_checkpoint(df.observe(obs, metric.alias("m")), reset_stats=reset_stats)
     return ck, obs.get["m"]
 
 

@@ -1,55 +1,49 @@
-"""Memory-adaptive broadcast gating for iterative operators.
+"""The broadcast gate: the one place that decides whether a graph
+operator hints `broadcast` on the small side of a join.
 
-Every iterative loop in graph/ gates its per-round `broadcast` hint on a
-row-count threshold (the checkpoint-loses-stats story in
-plans/iterate.py: Catalyst can't auto-broadcast a LogicalRDD with no
-statistics, so the loops count once and hint explicitly). The threshold
-used to be a fixed 4M-row config — SURVEY §8 listed that as an honest
-limit, because whether 4M rows of labels actually fit depends on the
-executor heap, not on a constant.
+Why a gate at all: the iterative operators checkpoint their tables
+(plans/iterate.py), and a checkpointed plan has no size statistics, so
+Catalyst and AQE can never pick a broadcast join for it themselves.
+Without a hint every round shuffles the full edge list.
 
-`adaptive_broadcast_rows` derives the threshold from the session's
-memory configuration instead:
+The policy, in full:
 
-  threshold_rows = (heap_bytes * fraction) / bytes_per_row
+- `broadcast_hint(spark, n_rows, schema)` returns `F.broadcast` when
+  `n_rows <= adaptive_broadcast_rows(spark, est_row_bytes(schema))`
+  and the identity otherwise. Past the limit the join runs as a keyed
+  shuffle with AQE skew handling.
+- `n_rows` is a count the operator already has: an `observe()` metric
+  on the eager checkpoint that builds the side, a parquet-footer row
+  count (`catalog.parquet_num_rows`), or the memoized edge count of
+  `_copurchase_pairs`. It may be an upper bound on the side's rows; a
+  gate never runs a Spark job of its own.
+- `schema` is the broadcast side's schema. `est_row_bytes` prices it
+  per row: Catalyst's per-type default sizes times 3 for the hash
+  relation's overhead.
+- The limit is `heap * 0.10 / bytes_per_row`, clamped to
+  [100k, 64M] rows. `heap` is `spark.driver.memory` in local mode
+  (executors are threads in the driver JVM) and
+  `spark.executor.memory` on a cluster; Spark's default is 1g. The
+  driver builds every broadcast relation, so the driver heap bounds it
+  on a cluster as well. One relation takes at most a tenth of the heap
+  so that it does not evict the shuffle pages its rounds need. The
+  100k floor keeps a tiny test heap from turning small graphs into
+  shuffles. The 64M cap bounds the driver-side build: a 64M-row hash
+  relation is already ~4 GiB serialized.
+- A loop resolves its gate once, before its first round, from static
+  conf. A loop that switched join strategy between rounds would churn
+  broadcast registrations in the executors' block managers.
 
-- **heap_bytes**: `spark.executor.memory` on a cluster; in local mode
-  executors live inside the driver JVM, so `spark.driver.memory` is the
-  real heap. Spark's default when unset is 1g.
-- **fraction** (default 0.10): a broadcast relation is materialized
-  ONCE per executor and coexists with execution/shuffle memory
-  (`spark.memory.fraction`≈0.6 of heap) and any other live broadcasts;
-  10% of the heap for one relation keeps the loop's broadcast from
-  evicting the very shuffle pages its rounds need. The driver also
-  builds the relation, so driver heap bounds it even on a cluster —
-  which is why local mode reading driver memory is not a special case
-  but the general constraint.
-- **bytes_per_row** (default 64): a conservative estimate for the
-  (key, small-attr) rows these loops broadcast — an 8-byte long key +
-  attr + the ~2-3× overhead of the JVM broadcast hash map. Callers
-  with wide attrs (string block hashes ≈ 64-char hex) should pass a
-  larger estimate; the graph loops' label/pointer tables are
-  long/long-shaped.
-
-The result is clamped to [floor, cap]: `floor` (default 100k) keeps a
-tiny test heap from degrading small-graph runs to shuffles, and `cap`
-(default 64M) bounds the driver-side build + serialize time even on a
-very large heap (a 64M-row hash relation is already ~4 GiB serialized —
-past that the per-round keyed shuffle with AQE skew handling wins on
-wall-clock anyway, because the broadcast rebuild itself is a scan of
-the loop-carried table every round).
-
-The threshold is resolved ONCE per loop (not per round) from static
-conf — deliberately: a loop flip-flopping join strategies between
-rounds would thrash executor block managers with alternating broadcast
-registrations.
+`adaptive_broadcast_rows` is also the seam tests patch to force a path:
+returning 0 sends every gated join down the shuffle path.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _SIZE_RE = re.compile(r"^\s*(\d+)\s*([kmgt]?)b?\s*$", re.IGNORECASE)
 
@@ -85,8 +79,8 @@ def adaptive_broadcast_rows(
     floor: int = 100_000,
     cap: int = 64_000_000,
 ) -> int:
-    """Max rows an iterative loop should broadcast per round on THIS
-    session's memory config (see module docstring for the model)."""
+    """Max rows one broadcast relation may hold on this session's
+    memory config (see the module docstring)."""
     budget = int(heap_bytes(spark) * fraction)
     return max(floor, min(cap, budget // bytes_per_row))
 
@@ -118,9 +112,7 @@ _HASH_RELATION_OVERHEAD = 3
 def est_row_bytes(schema) -> int:
     """Broadcast-relation bytes per row for a StructType: per-field
     defaultSize (recursing into structs/arrays/maps/decimals) times the
-    hash-relation overhead. Used by the iterative loops to size the
-    adaptive gate from the ACTUAL vertex schema instead of a constant
-    (SURVEY §8 r11 residual)."""
+    hash-relation overhead."""
 
     def field_bytes(dt) -> int:
         name = dt.typeName()
@@ -138,3 +130,14 @@ def est_row_bytes(schema) -> int:
 
     raw = sum(field_bytes(f.dataType) for f in schema.fields)
     return max(16, raw) * _HASH_RELATION_OVERHEAD
+
+
+def _no_hint(df: DataFrame) -> DataFrame:
+    return df
+
+
+def broadcast_hint(spark: SparkSession, n_rows: int, schema):
+    """`F.broadcast` if a side of `n_rows` rows of `schema` fits the
+    broadcast limit, else the identity (see the module docstring)."""
+    limit = adaptive_broadcast_rows(spark, bytes_per_row=est_row_bytes(schema))
+    return F.broadcast if n_rows <= limit else _no_hint

@@ -83,3 +83,22 @@ def test_memo_serves_plans_not_results(spark, tmp_path):
                 os.path.join(dst, "customer.parquet"))
     n_big = table(spark, dst, "customer").count()
     assert n_big > n_small
+
+
+def test_memoized_evicts_oldest_first_and_releases_it():
+    from blockchain2graphdb_spark.plans.memo import memoized
+
+    store: dict = {}
+    released = []
+    builds = []
+
+    def get(key):
+        return memoized(
+            store, key, lambda: builds.append(key) or f"v{key}", 2, released.append
+        )
+
+    assert [get(k) for k in (1, 2, 1)] == ["v1", "v2", "v1"]
+    assert builds == [1, 2] and released == []
+    assert get(3) == "v3"
+    assert released == ["v1"] and list(store) == [2, 3]
+

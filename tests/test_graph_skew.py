@@ -76,11 +76,12 @@ def test_hub_graph_is_actually_skewed():
     assert deg[HUB] == degrees[0] and deg[HUB] >= 10 * degrees[len(degrees) // 2]
 
 
-def test_triangle_count_shuffle_path_on_hub_graph(spark, skew_dir):
-    """broadcast_edges_max=0 forces the keyed-shuffle adjacency joins —
-    the 100 TB path — on a graph whose hub makes the per-vertex
+def test_triangle_count_shuffle_path_on_hub_graph(spark, skew_dir, monkeypatch):
+    """A zero broadcast-gate limit forces the keyed-shuffle adjacency
+    joins — the 100 TB path — on a graph whose hub makes the per-vertex
     adjacency maximally uneven."""
     from blockchain2graphdb_spark.operators.graphops import triangle_count
+    from blockchain2graphdb_spark.plans import sizing
 
     pairs = _pairs(_skewed_orders())
     fwd: dict = {}
@@ -88,7 +89,8 @@ def test_triangle_count_shuffle_path_on_hub_graph(spark, skew_dir):
         fwd.setdefault(a, set()).add(b)
     want = sum(len(fwd.get(a, set()) & fwd.get(b, set())) for a, b in pairs)
 
-    got = triangle_count(spark, skew_dir, broadcast_edges_max=0).collect()
+    monkeypatch.setattr(sizing, "adaptive_broadcast_rows", lambda *a, **k: 0)
+    got = triangle_count(spark, skew_dir).collect()
     assert got[0]["n_triangles"] == want and want > 0
 
 

@@ -193,20 +193,39 @@ def test_hash_stratified_sample_rank_limit_pushdown(spark):
     assert has_node(_df("sample_hash_stratified", spark), "WindowGroupLimit")
 
 
-def test_triangle_count_shuffle_path_above_threshold(spark):
+def test_triangle_count_shuffle_path_above_threshold(spark, monkeypatch):
     """Above the broadcast threshold we must not FORCE a broadcast
     (round-1 scale-killer: unconditional hint) — no ResolvedHint in the
     logical plan; any remaining broadcast is Catalyst's own stats-based
     call (the array-built pairs keep size stats through the checkpoint,
     so at test scale it may still rightly pick one). Both paths must
-    count the same triangles."""
+    count the same triangles. The shuffle path is forced with a zero
+    broadcast-gate limit."""
     from blockchain2graphdb_spark.operators.graphops import triangle_count
+    from blockchain2graphdb_spark.plans import sizing
 
     bcast = triangle_count(spark, SF_DIR)
-    shuf = triangle_count(spark, SF_DIR, broadcast_edges_max=0)
+    monkeypatch.setattr(sizing, "adaptive_broadcast_rows", lambda *a, **k: 0)
+    shuf = triangle_count(spark, SF_DIR)
     assert "ResolvedHint" not in plan_string(shuf, "extended")
     assert "ResolvedHint" in plan_string(bcast, "extended")
     assert bcast.collect() == shuf.collect()
+
+
+def test_expand_scope_keeps_the_floor_on_a_truncated_footer(spark, tmp_path):
+    """An unreadable lineitem footer must fall back to the 64 KB
+    coalesce floor instead of raising out of the scope."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from blockchain2graphdb_spark.operators.graphops import _expand_scope
+
+    path = tmp_path / "lineitem.parquet"
+    pq.write_table(pa.table({"l_orderkey": [1, 2, 3]}), path)
+    path.write_bytes(path.read_bytes()[:-6])
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    with _expand_scope(spark, str(tmp_path)):
+        assert spark.conf.get(key) == str(64 * 1024)
 
 
 def test_sample_hash_topk_rank_limit_pushdown(spark):

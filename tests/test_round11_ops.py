@@ -138,11 +138,13 @@ def test_adaptive_broadcast_rows_derives_from_session_heap(spark):
 
 
 @pytest.mark.slow  # >9s measured r13; full lane still runs it
-def test_pregel_broadcast_switch_equivalence(spark):
+def test_pregel_broadcast_switch_equivalence(spark, monkeypatch):
     """The same Pregel computation forced down the broadcast path, the
     shuffle path, and the adaptive default must agree exactly — the
-    two-path test extended to cover the adaptive switch."""
+    two-path test extended to cover the adaptive switch. Paths are
+    forced at the broadcast gate's limit seam."""
     from blockchain2graphdb_spark.graph.pregel import chain_heights, pregel
+    from blockchain2graphdb_spark.plans import sizing
     from pyspark.sql import functions as F
 
     # a 16-block chain: heights 0..15 via message passing. Depth only
@@ -153,7 +155,13 @@ def test_pregel_broadcast_switch_equivalence(spark):
     rows = [(f"h{i:03d}", None if i == 0 else f"h{i-1:03d}") for i in range(16)]
     blocks = spark.createDataFrame(rows, "hash string, prev_hash string")
 
-    def run(bn):
+    def run(limit):
+        with monkeypatch.context() as m:
+            if limit is not None:
+                m.setattr(sizing, "adaptive_broadcast_rows", lambda *a, **k: limit)
+            return build()
+
+    def build():
         vertices = blocks.select(
             F.col("hash").alias("id"),
             F.when(F.col("prev_hash").isNull(), F.lit(0))
@@ -171,7 +179,6 @@ def test_pregel_broadcast_switch_equivalence(spark):
             agg_msg=F.max,
             vprog=lambda attr, msg: F.coalesce(attr, msg),
             max_iter=64,
-            broadcast_nodes=bn,
         )
         return sorted((r["id"], r["attr"]) for r in out.collect())
 
@@ -183,15 +190,19 @@ def test_pregel_broadcast_switch_equivalence(spark):
 
 
 @pytest.mark.slow  # >5.5s in the r14 fast-lane durations; full lane still runs it
-def test_components_adaptive_threshold_agrees_with_forced_paths(spark):
+def test_components_adaptive_threshold_agrees_with_forced_paths(spark, monkeypatch):
     from blockchain2graphdb_spark.graph.components import connected_components
+    from blockchain2graphdb_spark.plans import sizing
 
     edges = [(i, i + 1) for i in range(100, 180)] + [(500, 501), (501, 502)]
     df = spark.createDataFrame(edges, "src long, dst long")
     outs = []
-    for bn in (0, 10**9, None):
-        comp = connected_components(df, driver_threshold=0, broadcast_nodes=bn)
-        outs.append(sorted((r["node"], r["comp"]) for r in comp.collect()))
+    for limit in (0, 10**9, None):
+        with monkeypatch.context() as m:
+            if limit is not None:
+                m.setattr(sizing, "adaptive_broadcast_rows", lambda *a, **k: limit)
+            comp = connected_components(df, driver_threshold=0)
+            outs.append(sorted((r["node"], r["comp"]) for r in comp.collect()))
     assert outs[0] == outs[1] == outs[2]
 
 
